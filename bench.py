@@ -99,6 +99,7 @@ def main() -> None:
         "unit": "sec",
         "queries": timings,
         "sf": sf,
+        "cpus": spark.sparkContext.defaultParallelism,
     }
     if total1 > total0:
         out["host_steal_pct"] = round(
@@ -124,28 +125,34 @@ def main() -> None:
         rnd = str(max(seen) + 1 if seen else 0)
     fname = f"r{int(rnd):02d}.json"
     target = results_dir / fname
-    # Never clobber a cleaner (lower-steal) committed reference with a
-    # more-contended run — r15's driver run overwrote the 0.05%-steal
-    # gated reference with a 2.93%-steal run. Divert such runs to
-    # bench_results/adhoc/ (never committed as references).
+    # Never clobber a committed reference with a run it cannot be
+    # compared to — r15's driver run overwrote the 0.05%-steal gated
+    # reference with a 2.93%-steal run. Divert to bench_results/adhoc/
+    # (never committed as references) when the new run has more steal,
+    # when either steal value is unknown, or when the reference was
+    # taken on a different (or unrecorded) CPU count.
     if target.exists():
         try:
-            prev_steal = json.load(open(target)).get("host_steal_pct")
+            with open(target) as fh:
+                prev = json.load(fh)
         except Exception:
-            prev_steal = None
+            prev = {}
+        prev_steal = prev.get("host_steal_pct")
         new_steal = out.get("host_steal_pct")
-        if (
-            prev_steal is not None
-            and new_steal is not None
-            and new_steal > max(prev_steal, 0.5)
-        ):
+        reason = None
+        if prev_steal is None or new_steal is None:
+            reason = f"steal unknown (reference {prev_steal}, run {new_steal})"
+        elif new_steal > max(prev_steal, 0.5):
+            reason = f"steal {new_steal}% > reference {prev_steal}%"
+        elif prev.get("cpus") != out["cpus"]:
+            reason = f"cpus {out['cpus']} != reference {prev.get('cpus')}"
+        if reason:
             adhoc = results_dir / "adhoc"
             adhoc.mkdir(exist_ok=True)
             n = len(list(adhoc.glob(f"r{int(rnd):02d}_steal*.json")))
             target = adhoc / f"r{int(rnd):02d}_steal{new_steal}_{n}.json"
             print(
-                f"[bench] steal {new_steal}% > reference {prev_steal}%:"
-                f" writing {target} instead of {fname}",
+                f"[bench] {reason}: writing {target} instead of {fname}",
                 file=sys.stderr,
             )
     target.write_text(json.dumps(out, indent=1) + "\n")

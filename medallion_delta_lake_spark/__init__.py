@@ -11,9 +11,9 @@ Design rules (see SURVEY.md):
 - DataFrame/SQL only; logical plans are declared, Catalyst optimizes.
 - No driver-side data loops (the reference's k-NN collect() is replaced
   by a broadcast cross-join + window plan).
-- Delta Lake is optional: when ``delta-spark`` is importable the upsert
-  operator uses native ``DeltaTable.merge``; otherwise an equivalent
-  DataFrame merge + atomic parquet-snapshot writer is used.
+- No delta-spark: Delta tables are read and written by the in-repo
+  log engine (``sources/delta_log.py``); plain tables are parquet
+  snapshots swapped in atomically by the upsert operator.
 """
 
 from medallion_delta_lake_spark.session import get_spark

@@ -87,7 +87,9 @@ def group_normalize(
 
     def _center(pdf: pd.DataFrame) -> pd.DataFrame:
         cents = (pdf[value_col] * 100).round().astype("int64")
-        g = cents.groupby([pdf[k] for k in keys], sort=False)
+        # dropna=False: a NULL key is one group, as in Spark's groupBy
+        # and the oracle's PARTITION BY
+        g = cents.groupby([pdf[k] for k in keys], sort=False, dropna=False)
         mean = g.transform("sum").astype("float64") / (
             100.0 * g.transform("size").astype("float64")
         )
@@ -105,7 +107,8 @@ def group_normalize(
             last = pdf.iloc[-1]
             mask = None
             for k in keys:
-                m = pdf[k] == last[k]
+                # null-safe: NULL == NULL is False in pandas
+                m = (pdf[k] == last[k]) | (pdf[k].isna() & pd.isna(last[k]))
                 mask = m if mask is None else (mask & m)
             # sorted within the partition ⇒ rows of the last key are a
             # contiguous tail; hold them for the next batch (the group

@@ -16,16 +16,18 @@ Semantics (keys K, non-key columns V):
   ``delete_missing=True`` (``whenNotMatchedBySourceDelete``) — the
   table then *is* the latest source snapshot, keyed by K.
 
-Two physical paths:
-- **delta** (when delta-spark is importable): native ``DeltaTable.merge``
-  — touched-file join + rewrite + atomic log commit; only files holding
-  matched keys are rewritten, which is what makes incremental runs cheap
-  at 100 TB. The update condition is **null-safe** (``NOT (d.c <=> s.c)``)
-  — the reference's ``!=`` silently skips NULL↔value changes (quirk Q3).
-- **parquet fallback** (this container): the merged state is computed as
-  a DataFrame (:func:`merge_state`) and swapped in as a new snapshot
-  directory. Correctness-equivalent, full rewrite per run; the docstring
-  notes this is the test-environment path, not the scale path.
+Two backends, one semantics:
+- **log-backed** (the path carries a ``_delta_log``):
+  :func:`~medallion_delta_lake_spark.sources.delta_log.upsert_delta_log`,
+  a three-clause preset of the log engine's general MERGE — file-scoped
+  rewrite + atomic log commit; only files holding changed keys are
+  rewritten, which is what makes incremental runs cheap at 100 TB. The
+  update condition is **null-safe** (``NOT (d.c <=> s.c)``) — the
+  reference's ``!=`` silently skips NULL↔value changes (quirk Q3).
+- **parquet snapshot** (any other path — what the medallion pipeline
+  writes): the merged state is computed as a DataFrame
+  (:func:`merge_state`) and swapped in as a new snapshot directory.
+  Correctness-equivalent, full rewrite per run.
 """
 
 from __future__ import annotations
@@ -38,7 +40,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from medallion_delta_lake_spark.operators.window import latest_per_key
-from medallion_delta_lake_spark.session import delta_available
 from medallion_delta_lake_spark.sources.writers import table_exists
 
 
@@ -85,10 +86,6 @@ def merge_state(
     return src.unionByName(survivors)
 
 
-def _null_safe_change_cond(cols: Sequence[str]) -> str:
-    return " OR ".join(f"NOT (d.`{c}` <=> s.`{c}`)" for c in cols)
-
-
 def upsert(
     spark: SparkSession,
     source: DataFrame,
@@ -103,15 +100,12 @@ def upsert(
     src = dedup_source_by_key(source, keys, version_col)
 
     if not table_exists(spark, path):
-        writer = src.write.format("delta" if delta_available() else "parquet")
+        writer = src.write.format("parquet")
         if partition_col:
             writer = writer.partitionBy(partition_col)
         writer.mode("overwrite").save(path)
         return
 
-    if delta_available():
-        _upsert_delta(spark, src, path, keys, delete_missing)
-        return
     from medallion_delta_lake_spark.sources import delta_log
 
     if delta_log.is_delta_table(path):
@@ -127,32 +121,6 @@ def upsert(
         )
         return
     _upsert_parquet_snapshot(spark, src, path, keys, partition_col, delete_missing)
-
-
-def _upsert_delta(
-    spark: SparkSession,
-    src: DataFrame,
-    path: str,
-    keys: Sequence[str],
-    delete_missing: bool,
-) -> None:
-    from delta.tables import DeltaTable
-
-    dest = DeltaTable.forPath(spark, path)
-    non_keys = [c for c in src.columns if c not in keys]
-    on = " AND ".join(f"d.`{k}` <=> s.`{k}`" for k in keys)
-    builder = (
-        dest.alias("d")
-        .merge(src.alias("s"), on)
-        .whenMatchedUpdate(
-            condition=_null_safe_change_cond(non_keys) if non_keys else None,
-            set={c: f"s.`{c}`" for c in non_keys},
-        )
-        .whenNotMatchedInsert(values={c: f"s.`{c}`" for c in src.columns})
-    )
-    if delete_missing:
-        builder = builder.whenNotMatchedBySourceDelete()
-    builder.execute()
 
 
 def _upsert_parquet_snapshot(
@@ -210,22 +178,10 @@ def delete_keys(
     """Targeted key deletion from a managed table (the GDPR/right-to-
     be-forgotten primitive): anti-join the snapshot against the keys
     and swap the result in with the same crash-safe staging protocol
-    as the upsert. Under Delta this is a native DELETE (touched-file
-    rewrite); the parquet fallback rewrites the snapshot. Returns the
-    number of rows removed."""
+    as the upsert. A log-backed table deletes through the log engine's
+    MERGE (touched-file rewrite); a parquet snapshot is rewritten.
+    Returns the number of rows removed."""
     keys = list(keys)
-    if delta_available():
-        from delta.tables import DeltaTable
-
-        dest = DeltaTable.forPath(spark, path)
-        before = spark.read.format("delta").load(path).count()
-        cond = " AND ".join(f"d.`{k}` <=> s.`{k}`" for k in keys)
-        # native path: merge-delete on key match
-        dest.alias("d").merge(
-            keys_df.alias("s"), cond
-        ).whenMatchedDelete().execute()
-        return before - spark.read.format("delta").load(path).count()
-
     from medallion_delta_lake_spark.sources import delta_log as _dl
 
     if _dl.is_delta_table(path):

@@ -493,7 +493,7 @@ def maintenance_history_audit_q(
 ) -> DataFrame:
     """maintenance / DESCRIBE HISTORY — the audit view
     (sources/delta_log.py:table_history, the log engine's answer to
-    DeltaTable.history()) over a pinned five-commit life: overwrite
+    Delta's table history) over a pinned five-commit life: overwrite
     seed, append, DELETE-by-deletion-vector, OPTIMIZE bin-pack,
     RESTORE to the append version. Every (version, operation,
     add/remove action count) is pinned — proving commitInfo

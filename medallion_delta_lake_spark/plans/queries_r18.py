@@ -211,6 +211,29 @@ def stream_cdf_tail_q(spark: SparkSession, sf_dir: str) -> DataFrame:
 # stream-cdf-replica
 
 
+def latest_change_per_key(
+    batch: DataFrame, key: str, data_cols: list[str]
+) -> DataFrame:
+    """The last non-preimage change of each key in a change-feed batch,
+    as ``data_cols`` + ``_change_type`` — what a replica folds in
+    (``delete`` removes the key, anything else replaces or inserts it).
+    Ties inside one commit version are broken deterministically: a
+    commit that rewrites a file reports a key it keeps as ``delete``
+    plus ``insert``, and the key is live afterwards, so non-delete
+    rows win; the data columns settle any remaining tie."""
+    w = Window.partitionBy(key).orderBy(
+        F.col("_commit_version").desc(),
+        (F.col("_change_type") == "delete").asc(),
+        *[F.col(c).asc() for c in data_cols if c != key],
+    )
+    return (
+        batch.filter(F.col("_change_type") != "update_preimage")
+        .withColumn("_rn", F.row_number().over(w))
+        .filter(F.col("_rn") == 1)
+        .select(*data_cols, "_change_type")
+    )
+
+
 @draft(
     "stream-cdf-replica",
     # the replica's final state must equal the source's: m in (1,2),
@@ -306,18 +329,9 @@ def stream_cdf_replica_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     data_cols = ["event_id", "event_type", "cents"]
 
     def fold(batch: DataFrame, batch_id: int) -> None:
-        w = Window.partitionBy("event_id").orderBy(
-            F.col("_commit_version").desc()
-        )
-        latest = (
-            batch.filter(F.col("_change_type") != "update_preimage")
-            .withColumn("_rn", F.row_number().over(w))
-            .filter(F.col("_rn") == 1)
-            .select(*data_cols, "_change_type")
-        )
         dl.merge_delta_log(
             spark,
-            latest,
+            latest_change_per_key(batch, "event_id", data_cols),
             rep,
             ["event_id"],
             [

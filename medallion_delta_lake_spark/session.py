@@ -8,9 +8,11 @@ gold_table_creation.py:16-21) with one parameterized factory that:
 - pins the session time zone to UTC so results are comparable across
   engines (DuckDB oracle) and clusters;
 - enables AQE + skew-join handling explicitly (we rely on them at scale);
-- enables Arrow for the pandas-UDF extension operators;
-- wires the Delta Lake extension/catalog only when delta-spark is
-  importable (it is optional — see operators/upsert.py).
+- enables Arrow for the pandas-UDF extension operators.
+
+No Delta Lake extension is wired: log-backed tables are read and
+written by the engine's own log engine (sources/delta_log.py), and
+plain tables are parquet snapshots (operators/upsert.py).
 """
 
 from __future__ import annotations
@@ -18,21 +20,6 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
-
-_DELTA_AVAILABLE: bool | None = None
-
-
-def delta_available() -> bool:
-    """True if the delta-spark python bindings are importable."""
-    global _DELTA_AVAILABLE
-    if _DELTA_AVAILABLE is None:
-        try:
-            import delta  # noqa: F401
-
-            _DELTA_AVAILABLE = True
-        except Exception:
-            _DELTA_AVAILABLE = False
-    return _DELTA_AVAILABLE
 
 
 def get_spark(
@@ -79,13 +66,6 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "8g"))
         .config("spark.ui.enabled", "false")
     )
-    if delta_available():
-        builder = builder.config(
-            "spark.sql.extensions", "io.delta.sql.DeltaSparkSessionExtension"
-        ).config(
-            "spark.sql.catalog.spark_catalog",
-            "org.apache.spark.sql.delta.catalog.DeltaCatalog",
-        )
     if extra_conf:
         for k, v in extra_conf.items():
             builder = builder.config(k, v)

@@ -29,7 +29,7 @@ run), so DVs produced by other writers that run-compress still resolve.
 
 Reference parity: the reference engine deletes by key-partitioned file
 rewrite only (medallion_delta_lake/silver_table_creation.py relies on
-DeltaTable.merge); DV support goes beyond it so modern reader-v3 tables
+Delta MERGE); DV support goes beyond it so modern reader-v3 tables
 (delta-spark writes DVs by default for DELETE/MERGE since 3.1) stay
 readable by this repo without delta-spark.
 """

@@ -10,7 +10,9 @@ Covers the reference's three scan shapes (SURVEY.md §2.1):
   object {id: name, ...} read as one wide row). ``melt_wide_map_row``
   normalizes that into (key, value) rows so it joins downstream.
 - ``scan-delta`` — silver_table_creation.py:28 etc. ``scan_table``
-  reads delta when available, else parquet snapshots written by
+  reads a log-backed table through the engine's log engine
+  (:mod:`medallion_delta_lake_spark.sources.delta_log`), else the
+  parquet snapshot written by
   :mod:`medallion_delta_lake_spark.sources.writers`.
 """
 
@@ -19,8 +21,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
-
-from medallion_delta_lake_spark.session import delta_available
 
 
 def scan(spark: SparkSession, path: str, fmt: str = "parquet", **options) -> DataFrame:
@@ -73,17 +73,15 @@ def melt_wide_map_row(df: DataFrame, key_name: str, value_name: str) -> DataFram
 
 
 def scan_table(spark: SparkSession, path: str) -> DataFrame:
-    """Read an engine-managed table (delta if available, else parquet).
+    """Read an engine-managed table: log-backed or parquet snapshot.
 
-    Without delta-spark, a path that carries a ``_delta_log`` is still
-    read as a REAL Delta table via the pure-Python log-replay reader
-    (sources/delta_log.py) — snapshot semantics, not a blind directory
-    glob (a parquet glob over a Delta dir would resurrect removed
-    files). The plain-parquet path reads with mergeSchema so appended
-    files carrying evolved (widened) schemas union correctly — the
-    read-time equivalent of Delta's transaction-log schema evolution."""
-    if delta_available():
-        return spark.read.format("delta").load(path)
+    A path that carries a ``_delta_log`` is read as a REAL Delta table
+    via the pure-Python log-replay reader (sources/delta_log.py) —
+    snapshot semantics, not a blind directory glob (a parquet glob over
+    a Delta dir would resurrect removed files). The plain-parquet path
+    reads with mergeSchema so appended files carrying evolved (widened)
+    schemas union correctly — the read-time equivalent of Delta's
+    transaction-log schema evolution."""
     from medallion_delta_lake_spark.sources import delta_log
 
     if delta_log.is_delta_table(path):

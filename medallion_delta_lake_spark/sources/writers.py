@@ -10,9 +10,11 @@ Covers the reference's write shapes (SURVEY.md §2.1):
   probe (silver_table_creation.py:43-46 ×7) becomes an explicit
   existence check (``table_exists``) — quirk Q4 in SURVEY.md §4.
 
-When delta-spark is absent, tables are plain partitioned parquet
-directories; `mergeSchema` has no transaction-log equivalent there, so
-schema evolution is handled at read time (spark.read.option
+Two backends. A path that carries a ``_delta_log`` is a log-backed
+table and every write goes through its transaction log
+(:mod:`medallion_delta_lake_spark.sources.delta_log`). Any other path
+is a plain partitioned parquet snapshot; `mergeSchema` has no log
+there, so schema evolution is handled at read time (spark.read.option
 ("mergeSchema", true) on parquet honors it for compatible changes).
 """
 
@@ -22,20 +24,10 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
-from medallion_delta_lake_spark.session import delta_available
-
-
-def _fmt() -> str:
-    return "delta" if delta_available() else "parquet"
-
 
 def table_exists(spark: SparkSession, path: str) -> bool:
-    """Existence probe replacing the reference's bare try/except write."""
-    if delta_available():
-        from delta.tables import DeltaTable
-
-        return DeltaTable.isDeltaTable(spark, path)
-    # parquet fallback: directory with at least one data or metadata file
+    """Existence probe replacing the reference's bare try/except write:
+    a directory with at least one data or metadata file."""
     if not os.path.isdir(path):
         return False
     for _, _, files in os.walk(path):
@@ -53,7 +45,7 @@ def write_append(
     """Append write with optional hive partitioning + schema evolution."""
     from medallion_delta_lake_spark.sources import delta_log
 
-    if not delta_available() and delta_log.is_delta_table(path):
+    if delta_log.is_delta_table(path):
         # log-backed table: bare parquet files would be INVISIBLE to
         # the log's readers — append through the transaction log
         delta_log.write_delta(
@@ -65,7 +57,7 @@ def write_append(
             merge_schema=merge_schema,
         )
         return
-    writer = df.write.format(_fmt()).mode("append")
+    writer = df.write.format("parquet").mode("append")
     if merge_schema:
         writer = writer.option("mergeSchema", "true")
     if partition_col:
@@ -79,7 +71,7 @@ def write_overwrite(
     """Idempotent full overwrite (dimension tables)."""
     from medallion_delta_lake_spark.sources import delta_log
 
-    if not delta_available() and delta_log.is_delta_table(path):
+    if delta_log.is_delta_table(path):
         delta_log.write_delta(
             df.sparkSession,
             df,
@@ -89,9 +81,7 @@ def write_overwrite(
             overwrite_schema=True,
         )
         return
-    writer = df.write.format(_fmt()).mode("overwrite")
-    if delta_available():
-        writer = writer.option("overwriteSchema", "true")
+    writer = df.write.format("parquet").mode("overwrite")
     if partition_col:
         writer = writer.partitionBy(partition_col)
     writer.save(path)
@@ -124,13 +114,14 @@ def compact(
     ingestion leaves thousands of tiny files whose per-file overhead
     dominates scans at 100 TB. Sorting within files tightens parquet
     row-group min/max bounds, so later range predicates skip whole row
-    groups (the poor man's Z-order; under Delta use OPTIMIZE ZORDER).
-    Uses the same crash-safe staging/swap as the snapshot upsert.
+    groups (the poor man's Z-order). A log-backed table compacts through
+    the log engine's OPTIMIZE instead; a parquet snapshot uses the same
+    crash-safe staging/swap as the snapshot upsert.
     """
     from medallion_delta_lake_spark.sources import delta_log
     from medallion_delta_lake_spark.sources.readers import scan_table
 
-    if not delta_available() and delta_log.is_delta_table(path):
+    if delta_log.is_delta_table(path):
         # log-backed: the staging/dir-swap would orphan the log —
         # compaction is the log engine's OPTIMIZE (sort_cols map to
         # the Z-order clustering key)
@@ -162,7 +153,7 @@ def compact(
         df = df.sortWithinPartitions(*sort_cols)
     else:
         df = df.repartition(target_files)
-    writer = df.write.format(_fmt()).mode("overwrite")
+    writer = df.write.format("parquet").mode("overwrite")
     if partition_col:
         writer = writer.partitionBy(partition_col)
     writer.save(staging)

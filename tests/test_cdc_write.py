@@ -95,6 +95,29 @@ def test_merge_emits_insert_update_delete(spark, tmp_path):
     assert got == {(1, 11), (3, 30), (4, 40)}
 
 
+def test_upsert_emits_paired_images(spark, tmp_path):
+    """The SCD-1 upsert is a preset of the general MERGE, so its feed
+    carries paired images for the changed key and an insert for the
+    new one — not a delete + insert of every row of the rewritten
+    file."""
+    t = str(tmp_path / "t")
+    _cdf_table(spark, t, [(k, 10 * k) for k in range(1, 11)])
+    v = delta_log.upsert_delta_log(
+        spark,
+        _src(spark, [(1, 11), (11, 110)]),
+        t,
+        keys=["k"],
+        delete_missing=False,
+    )
+    assert _feed(spark, t, v) == [
+        (1, 10, "update_preimage"),
+        (1, 11, "update_postimage"),
+        (11, 110, "insert"),
+    ]
+    got = {(r.k, r.v) for r in delta_log.read_delta(spark, t).collect()}
+    assert got == {(k, 10 * k) for k in range(2, 11)} | {(1, 11), (11, 110)}
+
+
 def test_noop_update_emits_no_cdc(spark, tmp_path):
     t = str(tmp_path / "t")
     _cdf_table(spark, t, [(1, 10)])

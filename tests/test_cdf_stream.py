@@ -165,3 +165,43 @@ def test_optimize_commit_is_silent(spark, tmp_path):
     out = _feed(spark, p, 0, "cdf_" + uuid.uuid4().hex[:8])
     got = _counts(out)
     assert got == {(0, "insert"): 20}
+
+
+def test_replica_fold_tie_break_within_one_version(spark):
+    """stream-cdf-replica's latest-wins pick is deterministic when one
+    commit version holds several rows for a key: a kept key reported
+    as delete + insert (a file rewrite) stays live, and the data
+    columns settle a tie between two non-delete rows."""
+    from medallion_delta_lake_spark.plans.queries_r18 import (
+        latest_change_per_key,
+    )
+
+    rows = []
+    for k in range(1, 21):
+        pair = [(k, "t", k, "delete", 3), (k, "t", k, "insert", 3)]
+        rows += pair if k % 2 else pair[::-1]
+    rows += [
+        (21, "t", 7, "insert", 3),
+        (21, "t", 5, "insert", 3),
+        (22, "t", 1, "insert", 2),
+        (22, "t", 1, "delete", 3),
+        (23, "t", 8, "update_preimage", 4),
+        (23, "t", 9, "update_postimage", 4),
+    ]
+    batch = spark.createDataFrame(
+        rows,
+        "event_id long, event_type string, cents long, "
+        "_change_type string, _commit_version long",
+    ).repartition(4)
+    got = {
+        r.event_id: (r.cents, r._change_type)
+        for r in latest_change_per_key(
+            batch, "event_id", ["event_id", "event_type", "cents"]
+        ).collect()
+    }
+    assert got == {
+        **{k: (k, "insert") for k in range(1, 21)},
+        21: (5, "insert"),
+        22: (1, "delete"),
+        23: (9, "update_postimage"),
+    }

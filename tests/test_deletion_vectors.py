@@ -10,7 +10,7 @@ checkpoint survival, vacuum GC of unreferenced DV files, and the
 concurrent-writer conflict guard.
 
 Reference parity note: the reference deletes only via whole-partition
-DeltaTable.merge rewrites (medallion_delta_lake/
+Delta MERGE rewrites (medallion_delta_lake/
 silver_table_creation.py:47-66); DV support exceeds it deliberately —
 see delta_log.delete_delta_log's docstring.
 """

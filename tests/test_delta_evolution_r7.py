@@ -169,7 +169,7 @@ def test_sync_merge_unpartitioned_is_file_scoped(spark, tmp_path):
     removed = sum(1 for a in acts if a.get("remove"))
     assert 0 < removed <= 2, removed  # only the hosts of ids 7 and 150
     info = next(a["commitInfo"] for a in acts if a.get("commitInfo"))
-    assert info["operationParameters"]["scope"] == "file-sync"
+    assert info["operationParameters"]["scope"] == "file-general"
 
     got = {r.id: r.v for r in delta_log.read_delta(spark, t).collect()}
     expect = {i: i * 10 for i in range(200) if i != 150}

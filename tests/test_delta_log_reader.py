@@ -923,9 +923,9 @@ def test_partitioned_read_falls_back_off_hive_layout(spark, tmp_path):
     assert got == {(1, "x"), (2, "y")}
 
 
-def test_upsert_file_scoped_touches_only_overlapping_files(spark, tmp_path):
-    """delete_missing=False merges must rewrite ONLY the files whose
-    logged key range can contain a source key (stats-granular MERGE) —
+def test_incremental_upsert_touches_only_overlapping_files(spark, tmp_path):
+    """delete_missing=False merges must rewrite ONLY the files holding
+    a changed key (stats-pruned scan, file-granular MERGE) —
     a small-batch upsert into a big table is O(touched files)."""
     from pyspark.sql import functions as F
 
@@ -972,7 +972,7 @@ def test_upsert_file_scoped_touches_only_overlapping_files(spark, tmp_path):
     assert delta_log.read_delta(spark, t).count() == 202
 
 
-def test_upsert_file_scoped_matches_dict_model(spark, tmp_path):
+def test_incremental_upsert_matches_dict_model(spark, tmp_path):
     from pyspark.sql import functions as F
 
     t = str(tmp_path / "fmodel")
@@ -996,6 +996,47 @@ def test_upsert_file_scoped_matches_dict_model(spark, tmp_path):
         model.update(dict(batch))
         got = {r.id: r.v for r in delta_log.read_delta(spark, t).collect()}
         assert got == model
+
+
+def test_upsert_matches_null_keys_null_safely(spark, tmp_path):
+    """Keys match with ``<=>``: upserting (NULL, 2) over (NULL, 1)
+    updates that row instead of inserting a second NULL key."""
+    t = str(tmp_path / "nullkey")
+    delta_log.write_delta(
+        spark, spark.createDataFrame([(None, 1)], "k int, v int"), t
+    )
+    delta_log.upsert_delta_log(
+        spark,
+        spark.createDataFrame([(None, 2)], "k int, v int"),
+        t,
+        keys=["k"],
+        delete_missing=False,
+    )
+    got = {(r.k, r.v) for r in delta_log.read_delta(spark, t).collect()}
+    assert got == {(None, 2)}
+
+
+def test_upsert_null_source_key_disables_range_pruning(spark, tmp_path):
+    """A NULL-keyed target row can sit in a file whose logged (non-null)
+    key range misses the source's range; a NULL in the source key must
+    keep that file in the scan so the NULL keys still match."""
+    t = str(tmp_path / "nullprune")
+    delta_log.write_delta(
+        spark,
+        spark.createDataFrame(
+            [(None, 1), (50, 5), (60, 6)], "k int, v int"
+        ).coalesce(1),
+        t,
+    )
+    delta_log.upsert_delta_log(
+        spark,
+        spark.createDataFrame([(None, 2), (1, 10)], "k int, v int"),
+        t,
+        keys=["k"],
+        delete_missing=False,
+    )
+    got = {(r.k, r.v) for r in delta_log.read_delta(spark, t).collect()}
+    assert got == {(None, 2), (1, 10), (50, 5), (60, 6)}
 
 
 def test_multipart_checkpoint_round_trip(spark, tmp_path):
