@@ -216,6 +216,13 @@ def grouped_median_udaf(
     )
 
 
+def _new_group(g, cur_g) -> bool:
+    """Group boundary test of the partition-stream smoothers, null-safe:
+    a NULL key reaches pandas as NaN or None, and NaN != NaN, so every
+    NULL-keyed row would otherwise restart its series' recurrence."""
+    return g != cur_g and not (pd.isna(g) and pd.isna(cur_g))
+
+
 def holt_linear(
     df: DataFrame,
     group_col: str,
@@ -278,7 +285,7 @@ def holt_linear(
             for i in range(n):
                 x = xs[i]
                 g = gs[i]
-                if g != cur_g:
+                if _new_group(g, cur_g):
                     cur_g = g
                     lvl, trd = x, 0.0
                 else:
@@ -361,7 +368,7 @@ def croston(
             for i in range(n):
                 x = xs[i]
                 g = gs[i]
-                if g != cur_g:
+                if _new_group(g, cur_g):
                     cur_g = g
                     z = p = None
                     q = 0

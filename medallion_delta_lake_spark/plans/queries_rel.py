@@ -3415,9 +3415,13 @@ def stats_benford_deviation_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = table(spark, sf_dir, "orders").filter(
         F.col("o_totalprice") >= 1
     )
+    # bround = HALF_EVEN, as DuckDB's CAST(DOUBLE AS BIGINT) rounds; a
+    # bare cast truncates (1999.6 → leading digit 1, the oracle's 2)
     digits = o.select(
         F.substring(
-            F.col("o_totalprice").cast("bigint").cast("string"), 1, 1
+            F.bround(F.col("o_totalprice"), 0).cast("bigint").cast("string"),
+            1,
+            1,
         )
         .cast("int")
         .alias("digit")

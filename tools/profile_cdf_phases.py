@@ -2,7 +2,10 @@
 delta_log ops (write_delta, set_table_properties, delete_delta_log,
 update_delta_log, table_changes, merge_delta_log, optimize_delta_log)
 and the Spark job counter so each face's wall clock decomposes into
-its staging phases + job counts.
+its staging phases + job counts. Each commit a face makes is listed
+with its data and change-data file counts (``table_history``'s
+``numAddedFiles`` / ``numChangeFiles``), so file fan-out shows next to
+the phase times.
 
 Usage: python tools/profile_cdf_phases.py [--reps 2] id [id ...]
 """
@@ -24,6 +27,7 @@ from medallion_delta_lake_spark.session import get_spark  # noqa: E402
 from medallion_delta_lake_spark.sources import delta_log  # noqa: E402
 
 PHASES: list[tuple[str, float, int]] = []
+COMMITS: list[tuple[str, int]] = []  # (table path, committed version)
 
 
 def _wrap(mod, name, sc):
@@ -44,6 +48,33 @@ def _wrap(mod, name, sc):
     return orig
 
 
+def _record_commits():
+    orig = delta_log._commit_version
+
+    @functools.wraps(orig)
+    def recorded(path, *a, **k):
+        version = orig(path, *a, **k)
+        COMMITS.append((path, version))
+        return version
+
+    delta_log._commit_version = recorded
+
+
+def _print_commits() -> None:
+    for path, version in COMMITS:
+        try:
+            hist = {h["version"]: h for h in delta_log.table_history(path)}
+            h = hist[version]
+        except (FileNotFoundError, KeyError):  # table or log file cleaned up
+            print(f"    commit v{version:<3d} no longer in the log  {path}")
+            continue
+        print(
+            f"    commit v{version:<3d} {h['operation'] or '-':18s} "
+            f"numAddedFiles={h['numAddedFiles']} "
+            f"numChangeFiles={h['numChangeFiles']}  {path}"
+        )
+
+
 def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("ids", nargs="+")
@@ -58,6 +89,7 @@ def main() -> None:
 
     registry.table(spark, sf_dir, "region").count()
 
+    _record_commits()
     for name in (
         "write_delta",
         "set_table_properties",
@@ -80,6 +112,7 @@ def main() -> None:
     for qid in args.ids:
         for rep in range(args.reps):
             PHASES.clear()
+            COMMITS.clear()
             j0 = sc._jsc.sc().dagScheduler().nextJobId()
             t0 = time.perf_counter()
             df = q[qid](spark, sf_dir)
@@ -97,6 +130,7 @@ def main() -> None:
                 acc += dt
                 print(f"    {ph:22s} {dt:6.3f}s  jobs={nj}")
             print(f"    {'(phases total)':22s} {acc:6.3f}s")
+            _print_commits()
             caching.release_caches()
     spark.stop()
 
